@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Transforms
 import graft.schema.Schemas
-import graft.sinks.{CsvAppend, MergeOverwrite, RestSink, UpsertIgnore}
+import graft.sinks.{CsvAppend, MergeOverwrite, RestSink, StoreRead, UpsertIgnore}
 import graft.sources.{CsvHistorySource, HtmlRatesSource, RestJsonSource}
 
 /** Failure alerting seam (utils/email_utils.py:47-61 SMTP alert_admin).
@@ -42,11 +42,11 @@ object Pipelines {
       val df = RestJsonSource.read(spark, fetch)
         .withColumn("created_at", current_timestamp().cast("timestamp_ntz"))
         .cache()
-      CsvAppend(df.drop("created_at"), csvPath)
-      val res = UpsertIgnore(spark, df, tablePath,
-        Schemas.apiKey, pruneCol = Some("timestamptz"))
-      df.unpersist()
-      Some(res)
+      try {
+        CsvAppend(df.drop("created_at"), csvPath)
+        Some(UpsertIgnore(spark, df, tablePath,
+          Schemas.apiKey, pruneCol = Some("timestamptz")))
+      } finally df.unpersist()
     } catch {
       case e: Exception =>
         alerter.alert("api pipeline failed", e.getMessage)
@@ -84,7 +84,9 @@ object Pipelines {
   /** EP3 — web-scrape pipeline (etl/web_scraper.py:210-235): parse HTML →
     * merge-overwrite per-day dataset (keep-existing, K2) + upsert-ignore
     * keyed on (currency_name, timestamptz). Structural parse failures
-    * alert (etl/web_scraper.py:72-83).
+    * alert (etl/web_scraper.py:72-83). The page is parsed on the driver,
+    * so the empty-table gate reads the parsed rows instead of running a
+    * Spark job.
     */
   def scrape(
       spark: SparkSession,
@@ -93,19 +95,20 @@ object Pipelines {
       tablePath: String,
       alerter: Alerter = LogAlerter): Option[UpsertIgnore.Result] =
     try {
-      val df = HtmlRatesSource.read(spark, html)
-        .withColumn("created_at", current_timestamp().cast("timestamp_ntz"))
-        .cache()
-      if (df.isEmpty) { // A4 gate, etl/web_scraper.py:224
+      val rows = HtmlRatesSource.rows(html)
+      if (rows.isEmpty) { // A4 gate, etl/web_scraper.py:224
         alerter.alert("scrape pipeline", "no rows parsed from rates table")
         None
       } else {
-        MergeOverwrite(spark, df.drop("created_at"), dailyPath,
-          Schemas.scrapedKey, orderCol = "timestamptz")
-        val res = UpsertIgnore(spark, df, tablePath,
-          Schemas.scrapedKey, pruneCol = Some("timestamptz"))
-        df.unpersist()
-        Some(res)
+        val df = HtmlRatesSource.frame(spark, rows)
+          .withColumn("created_at", current_timestamp().cast("timestamp_ntz"))
+          .cache()
+        try {
+          MergeOverwrite(spark, df.drop("created_at"), dailyPath,
+            Schemas.scrapedKey, orderCol = "timestamptz")
+          Some(UpsertIgnore(spark, df, tablePath,
+            Schemas.scrapedKey, pruneCol = Some("timestamptz")))
+        } finally df.unpersist()
       }
     } catch {
       case e: Exception =>
@@ -115,7 +118,10 @@ object Pipelines {
 
   /** Sync (services/supabase.py:42-76): 20-minute `created_at` delta from
     * each source table, provenance-tagged, column-union schema merge
-    * (§1.2 drift), shipped via the partition-parallel REST sink.
+    * (§1.2 drift), shipped via the partition-parallel REST sink. One Spark
+    * pass: the returned count is the rows that pass posted, and an empty
+    * delta posts nothing (the A4 gate, supabase.py:65). The tables are
+    * upsert targets, read through the footer-schema cache.
     */
   def sync(
       spark: SparkSession,
@@ -128,13 +134,9 @@ object Pipelines {
       val deltas = tables.map { case (path, tag) =>
         Transforms.withSource(tag)(
           Transforms.recentDelta("created_at", lit(now).cast("timestamp_ntz"), minutes)(
-            spark.read.parquet(path)))
+            StoreRead.parquet(spark, path)))
       }
-      val unified = Transforms.unionBySchema(deltas).cache()
-      val n = unified.count()
-      if (n > 0) RestSink(unified, batchSize = 500)(post) // A4 gate, supabase.py:65
-      unified.unpersist()
-      Some(n)
+      Some(RestSink(Transforms.unionBySchema(deltas), batchSize = 500)(post))
     } catch {
       case e: Exception =>
         alerter.alert("sync failed", e.getMessage) // supabase.py:70-73

@@ -88,35 +88,16 @@ object UpsertIgnore {
       batch.join(keySide, keys, "left_anti")
   }
 
-  /** Anti-join `incoming` against the live target and append the delta.
-    * Returns inserted/skipped counts (K9 row-count accounting,
-    * etl/api_fetcher.py:189).
-    */
-  /** @param partitionBy physical partition columns for the target (e.g.
-    *        a date column). With it, `pruneCol` bounds become PARTITION
-    *        pruning on the existing scan (PartitionFilters, zero data
-    *        files read outside the batch's range) — the layout SURVEY §6
-    *        prescribes for the 100 TB target table.
-    * @param transactional commit through the TxTable manifest log: the
-    *        append publishes atomically (a reader racing the insert sees
-    *        the batch entirely or not at all — a plain append exposes
-    *        files as the committer moves them), and a crashed append
-    *        leaves only an orphan generation the rerun reclaims. Read
-    *        the table back with `TxTable.read`.
-    * @param statsCols transactional only: log per-generation min/max of
-    *        these columns in the manifest so `TxTable.readWhere` can
-    *        skip generations — an append stream keyed by time or id
-    *        blocks gets range-pruned reads for free.
-    */
   /** Count-free sibling of [[apply]] for the durable-store registration
     * path (the incremental dedup stores): same anti-join-append
     * semantics and the same pruned-broadcast delta plan, but no
-    * accounting — the batch cache/count and delta-count jobs exist only
-    * to fill [[Result]], and a store ingest never reads them. A caller
-    * registering SEVERAL tables from one batch passes the batch's key
-    * range once via `bounds` (the min/max Row of `pruneCol`), collapsing
-    * the per-table bounds scans too: registration is then 1 shared
-    * bounds job + 1 append job per table instead of ~4 jobs per table.
+    * accounting — the batch cache, stats aggregate and delta count
+    * exist only to fill [[Result]], and a store ingest never reads them.
+    * A caller registering SEVERAL tables from one batch passes the
+    * batch's key range once via `bounds` (the min/max Row of
+    * `pruneCol`), collapsing the per-table bounds scans too:
+    * registration is then 1 shared bounds job + 1 append job per table
+    * instead of a stats, a delta-count and an append pass per table.
     * At per-batch ingest cadence the fixed job count IS the latency;
     * the idempotence contract (anti-join per table, crash-rerun safe)
     * is unchanged.
@@ -150,6 +131,40 @@ object UpsertIgnore {
         .write.mode("append").parquet(targetPath)
     }
 
+  /** Anti-join `incoming` against the live target and append the delta.
+    * Returns inserted/skipped counts (K9 row-count accounting,
+    * etl/api_fetcher.py:189).
+    *
+    * Passes per call — at daily-batch size the action count IS the wall:
+    *
+    *  1. ONE stats aggregate over the (cached) batch: its row count and,
+    *     with `pruneCol`, the min/max `deltaPlan` prunes the existing
+    *     side with — the count and the bounds share one scan.
+    *  2. ONE delta evaluation: the anti-join (and its broadcast build)
+    *     runs once into a cached delta that feeds both the inserted
+    *     count and the write.
+    *  3. A write only when rows are inserted — a replay whose keys all
+    *     exist leaves the target's file listing untouched (no zero-row
+    *     part file).
+    *
+    * A missing target skips step 2: the whole batch is the delta.
+    *
+    * @param partitionBy physical partition columns for the target (e.g.
+    *        a date column). With it, `pruneCol` bounds become PARTITION
+    *        pruning on the existing scan (PartitionFilters, zero data
+    *        files read outside the batch's range) — the layout SURVEY §6
+    *        prescribes for the 100 TB target table.
+    * @param transactional commit through the TxTable manifest log: the
+    *        append publishes atomically (a reader racing the insert sees
+    *        the batch entirely or not at all — a plain append exposes
+    *        files as the committer moves them), and a crashed append
+    *        leaves only an orphan generation the rerun reclaims. Read
+    *        the table back with `TxTable.read`.
+    * @param statsCols transactional only: log per-generation min/max of
+    *        these columns in the manifest so `TxTable.readWhere` can
+    *        skip generations — an append stream keyed by time or id
+    *        blocks gets range-pruned reads for free.
+    */
   def apply(
       spark: SparkSession,
       incoming: DataFrame,
@@ -161,42 +176,50 @@ object UpsertIgnore {
       statsCols: Seq[String] = Nil): Result = {
     val batch = incoming.cache()
     try {
-      val total = batch.count()
-      if (transactional) {
+      val stats = batch.agg(count(lit(1)),
+        pruneCol.toSeq.flatMap(c => Seq(min(col(c)), max(col(c)))): _*).head()
+      val total = stats.getLong(0)
+      val bounds = pruneCol.map(_ => Row(stats.get(1), stats.get(2)))
+
+      def write(df: DataFrame): Unit = {
+        val writer = df.write.mode("append")
+        (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+          .parquet(targetPath)
+      }
+      def insertAbsent(existingAll: DataFrame)(commit: DataFrame => Unit): Result = {
+        SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)
+        if (total == 0) Result(0, 0)
+        else {
+          val delta = deltaPlan(spark, batch, existingAll, keys, pruneCol, bounds)
+            .select(existingAll.columns.toSeq.map(col): _*)
+            .cache()
+          try {
+            val inserted = delta.count()
+            if (inserted > 0) commit(delta)
+            Result(inserted, total - inserted)
+          } finally { delta.unpersist(); () }
+        }
+      }
+
+      if (transactional)
         TxTable.currentManifest(spark, targetPath) match {
           case None =>
             if (total > 0)
               TxTable.commit(spark, batch, targetPath, partitionBy,
                 replaceAll = true, statsCols = statsCols)
-            return Result(total, 0)
+            Result(total, 0)
           case Some(m) =>
-            val existingAll = TxTable.read(spark, targetPath).get
-            SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)
-            val delta = deltaPlan(spark, batch, existingAll, keys, pruneCol)
-              .select(existingAll.columns.toSeq.map(col): _*)
-            val inserted = delta.count()
-            if (inserted > 0)
+            insertAbsent(TxTable.read(spark, targetPath).get) { delta =>
               TxTable.commit(spark, delta, targetPath, partitionBy,
                 append = true, expectedVersion = Some(m.version),
                 statsCols = statsCols)
-            return Result(inserted, total - inserted)
+              ()
+            }
         }
-      }
-      val delta =
-        if (!targetExists(spark, targetPath)) batch
-        else {
-          val existingAll = graft.sinks.StoreRead.parquet(spark, targetPath)
-          SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)
-          deltaPlan(spark, batch, existingAll, keys, pruneCol)
-            .select(existingAll.columns.toSeq.map(col): _*)
-        }
-      val inserted = delta.count()
-      if (inserted > 0) {
-        val writer = delta.write.mode("append")
-        (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-          .parquet(targetPath)
-      }
-      Result(inserted, total - inserted)
+      else if (!targetExists(spark, targetPath)) {
+        if (total > 0) write(batch)
+        Result(total, 0)
+      } else insertAbsent(StoreRead.parquet(spark, targetPath))(write)
     } finally batch.unpersist()
   }
 }
@@ -644,11 +667,19 @@ object MergeOverwrite {
   * driver at scale).
   */
 object RestSink {
-  def apply(df: DataFrame, batchSize: Int)(post: Seq[String] => Unit): Unit = {
-    val json = df.toJSON
-    json.foreachPartition { it: Iterator[String] =>
-      it.grouped(batchSize).foreach(post(_))
+  /** Ships `df` in one pass and returns the number of rows posted,
+    * counted by an accumulator inside that pass — no separate count job.
+    * An empty frame posts nothing.
+    */
+  def apply(df: DataFrame, batchSize: Int)(post: Seq[String] => Unit): Long = {
+    val posted = df.sparkSession.sparkContext.longAccumulator("RestSink.posted")
+    df.toJSON.foreachPartition { it: Iterator[String] =>
+      it.grouped(batchSize).foreach { batch =>
+        post(batch)
+        posted.add(batch.size.toLong)
+      }
     }
+    posted.value
   }
 }
 

@@ -97,17 +97,26 @@ object HtmlRatesSource {
         }
     }
 
-  /** Full source: HTML text → scraped-shape DataFrame with the page
-    * timestamp stamped on every row (C5, etl/web_scraper.py:98-99).
+  /** Scraped-shape rows, parsed on the driver, with the page timestamp
+    * stamped on every row (C5, etl/web_scraper.py:98-99). Throws when the
+    * timestamp span is missing or unparseable; an empty result means the
+    * rates table held no data rows.
     */
-  def read(spark: SparkSession, html: String): DataFrame = {
+  def rows(html: String): Seq[Row] = {
     val ts = extractTimestamp(html)
       .getOrElse(throw new IllegalArgumentException(
         "ratesTimestamp span missing or unparseable"))
-    val rows = parseRates(html).map { case (name, rate) =>
+    parseRates(html).map { case (name, rate) =>
       Row(name, "EUR", rate, ts.toLocalDate, ts, null)
     }
+  }
+
+  /** [[rows]] as a one-partition DataFrame. */
+  def frame(spark: SparkSession, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toList, 1), Schemas.scraped)
-  }
+
+  /** Full source: HTML text → scraped-shape DataFrame. */
+  def read(spark: SparkSession, html: String): DataFrame =
+    frame(spark, rows(html))
 }

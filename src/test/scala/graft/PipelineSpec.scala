@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.time.{LocalDate, LocalDateTime}
+
 import org.apache.spark.sql.functions._
 import graft.pipelines.{Alerter, Orchestrator, Pipelines}
+import graft.sources.HtmlRatesSource
 
 class PipelineSpec extends SparkSpec {
 
@@ -62,6 +66,42 @@ class PipelineSpec extends SparkSpec {
     assert(r.isEmpty && alerted)
   }
 
+  test("EP3 A4 gate: a well-formed page whose table has only a header row") {
+    val work = tmpDir("ep3a4")
+    val html = readFixture("x_rates_table.html")
+      .replaceAll("(?s)(<tr><th>.*?</tr>).*?(</table>)", "$1\n$2")
+    // the page itself is valid: a parseable timestamp, a rates table
+    assert(HtmlRatesSource.extractTimestamp(html).isDefined)
+    assert(html.contains("ratesTable") && !html.contains("<td>"))
+    val alerts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val alerter = new Alerter {
+      def alert(s: String, b: String): Unit = { alerts.add(b); () }
+    }
+    val r = Pipelines.scrape(spark, html, s"$work/daily", s"$work/table", alerter)
+    assert(r.isEmpty)
+    assert(alerts.toArray.toSeq == Seq("no rows parsed from rates table"))
+    assert(!Files.exists(Paths.get(s"$work/daily")))
+    assert(!Files.exists(Paths.get(s"$work/table")))
+  }
+
+  test("EP3: a failing sink still releases the cached page") {
+    val work = tmpDir("ep3leak")
+    // a corrupt daily dataset: the merge's read fails while it scans the
+    // cached page alongside it
+    Files.createDirectories(Paths.get(s"$work/daily"))
+    Files.write(Paths.get(s"$work/daily/part-0.parquet"), "not parquet".getBytes)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    var alerted = false
+    val alerter = new Alerter {
+      def alert(s: String, b: String): Unit = { alerted = true }
+    }
+    val r = Pipelines.scrape(spark, readFixture("x_rates_table.html"),
+      s"$work/daily", s"$work/table", alerter)
+    assert(r.isEmpty && alerted)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "the failed scrape left its batch cached")
+  }
+
   test("sync: 20-min delta, provenance tags, column-union merge") {
     val work = tmpDir("sync")
     val json = readFixture("frankfurter_latest.json")
@@ -81,6 +121,36 @@ class PipelineSpec extends SparkSpec {
     assert(shipped.forall(_.contains("\"source\":")))
   }
 
+  test("sync: no row inside the window returns Some(0) and never posts") {
+    val work = tmpDir("sync0")
+    Pipelines.api(spark, () => readFixture("frankfurter_latest.json"),
+      s"$work/csv", s"$work/api")
+    SyncHarness.reset()
+    // an hour on (created_at is UTC wall time), every row is outside the
+    // 20-minute window
+    val n = Pipelines.sync(spark, Seq(s"$work/api" -> "api"),
+      LocalDateTime.now(java.time.ZoneOffset.UTC).plusHours(1), SyncHarness.post)
+    assert(n.contains(0L))
+    assert(SyncHarness.calls.get == 0, "an empty delta reached post")
+  }
+
+  test("sync: the returned count is the rows handed to post") {
+    import spark.implicits._
+    val work = tmpDir("syncn")
+    val now = LocalDateTime.parse("2026-08-11T18:00:00")
+    // two rows inside the window, two outside it
+    Seq(("USD", 1.08, now.minusMinutes(5)), ("GBP", 0.84, now.minusMinutes(19)),
+      ("JPY", 160.2, now.minusMinutes(21)), ("CHF", 0.97, now.minusHours(3)))
+      .toDF("currency", "exchange_rate", "created_at")
+      .write.parquet(s"$work/api")
+    SyncHarness.reset()
+    val n = Pipelines.sync(spark, Seq(s"$work/api" -> "api"), now, SyncHarness.post)
+    assert(n.contains(2L))
+    val shipped = SyncHarness.out.toArray(Array.empty[String]).toSeq
+    assert(shipped.size == 2)
+    assert(shipped.exists(_.contains("\"USD\"")) && shipped.exists(_.contains("\"GBP\"")))
+  }
+
   test("orchestrator: full run_etl analog, continue-on-failure") {
     val work = tmpDir("orch")
     SyncHarness.out.clear()
@@ -97,10 +167,38 @@ class PipelineSpec extends SparkSpec {
     assert(report.scrape.isEmpty) // failed but did not abort the run
     assert(report.synced.contains(11L)) // 5 api + 6 history
   }
+
+  test("job budget: a warm inserting run_etl day stays within its Spark jobs") {
+    val work = tmpDir("budget")
+    val json = readFixture("frankfurter_latest.json")
+    val html = readFixture("x_rates_table.html")
+    def day(date: String, page: String, anchor: String) = Orchestrator.runEtl(
+      spark, () => json.replace("2026-08-11", date), fixture("daily_forex_rates.csv"),
+      html.replace("Aug 11, 2026", page), work, LocalDate.parse(anchor),
+      SyncHarness.post)
+    day("2026-08-11", "Aug 11, 2026", "2026-08-09") // cold: creates the targets
+    SyncHarness.reset()
+    val (rep, jobs) = jobsIn(day("2026-08-12", "Aug 12, 2026", "2026-08-10"))
+    // every stage inserts: the day runs each sink's full path
+    assert(rep.api.contains(graft.sinks.UpsertIgnore.Result(5, 0)))
+    assert(rep.history.contains(graft.sinks.UpsertIgnore.Result(1, 5)))
+    assert(rep.scrape.contains(graft.sinks.UpsertIgnore.Result(4, 0)))
+    assert(rep.synced.contains(SyncHarness.out.size.toLong))
+    // 43 jobs when each sink counted, bounded and wrote in separate passes
+    // (batch count + bounds + delta count + write per upsert, an isEmpty
+    // job for the scrape gate, footer inference + count + post in sync);
+    // 28 with one stats aggregate, one cached delta and one sync pass
+    assert(jobs <= 28, s"a warm inserting day ran $jobs Spark jobs, budget 28")
+  }
 }
 
 /** Executor-side sink target — must be a JVM singleton (see RestSinkTestHarness). */
 object SyncHarness {
   val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  val post: Seq[String] => Unit = recs => recs.foreach(SyncHarness.out.add)
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
+  val post: Seq[String] => Unit = { recs =>
+    SyncHarness.calls.incrementAndGet()
+    recs.foreach(SyncHarness.out.add)
+  }
+  def reset(): Unit = { out.clear(); calls.set(0) }
 }

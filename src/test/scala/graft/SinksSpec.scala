@@ -114,6 +114,42 @@ class SinksSpec extends SparkSpec {
     val r = UpsertIgnore(spark, replay, dir, Seq("event_id"), pruneCol = Some("ts"))
     assert(r == UpsertIgnore.Result(inserted = 0, skipped = 1))
     assert(spark.read.parquet(dir).count() == 1)
+    // apply hands deltaPlan the replay's ts range from its one stats
+    // aggregate; for a non-key pruneCol those bounds must be ignored, so
+    // the join stays unpruned and still sees the 2020 row
+    val bounds = replay.agg(min(col("ts")), max(col("ts"))).head()
+    val delta = UpsertIgnore.deltaPlan(spark, replay, spark.read.parquet(dir),
+      Seq("event_id"), Some("ts"), precomputedBounds = Some(bounds))
+    assert(delta.count() == 0, "non-key bounds pruned the existing side")
+    // same through the transactional branch
+    val tx = tmpDir("k5dtx") + "/t"
+    UpsertIgnore(spark, first, tx, Seq("event_id"), pruneCol = Some("ts"),
+      transactional = true)
+    val rtx = UpsertIgnore(spark, replay, tx, Seq("event_id"), pruneCol = Some("ts"),
+      transactional = true)
+    assert(rtx == UpsertIgnore.Result(inserted = 0, skipped = 1))
+    assert(graft.sinks.TxTable.read(spark, tx).get.count() == 1)
+  }
+
+  test("K5: a replay whose keys all exist writes no file") {
+    val dir = tmpDir("k5noop") + "/t"
+    def parquetFiles() = {
+      import scala.jdk.CollectionConverters._
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try it.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally it.close()
+    }
+    val b = Seq(("USD", java.sql.Timestamp.valueOf("2026-08-11 16:00:00"), 1.08),
+      ("GBP", java.sql.Timestamp.valueOf("2026-08-11 16:00:00"), 0.84),
+      ("JPY", java.sql.Timestamp.valueOf("2026-08-12 16:00:00"), 160.2))
+      .toDF("currency", "timestamptz", "rate")
+    UpsertIgnore(spark, b, dir, Seq("currency", "timestamptz"), Some("timestamptz"))
+    val before = parquetFiles()
+    assert(before.nonEmpty)
+    val r = UpsertIgnore(spark, b, dir, Seq("currency", "timestamptz"), Some("timestamptz"))
+    assert(r == UpsertIgnore.Result(inserted = 0, skipped = 3))
+    assert(parquetFiles() == before, "the no-op replay added a part file")
+    assert(spark.read.parquet(dir).count() == 3)
   }
 
   test("K5: existing side above broadcast threshold plans a shuffle anti-join") {
@@ -610,8 +646,9 @@ class SinksSpec extends SparkSpec {
 
   test("K7 rest sink ships every row in partition-side batches") {
     RestSinkTestHarness.acc.clear()
-    RestSinkTestHarness.deliver(spark)
+    val posted = RestSinkTestHarness.deliver(spark)
     assert(RestSinkTestHarness.acc.size() == 7)
+    assert(posted == 7)
   }
 }
 
@@ -622,7 +659,7 @@ class SinksSpec extends SparkSpec {
   */
 object RestSinkTestHarness {
   val acc = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def deliver(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def deliver(spark: org.apache.spark.sql.SparkSession): Long = {
     import spark.implicits._
     val df = (1 to 7).map(i => (i, s"row$i")).toDF("id", "v")
     RestSink(df, batchSize = 3) { recs => recs.foreach(RestSinkTestHarness.acc.add) }

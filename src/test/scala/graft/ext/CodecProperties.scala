@@ -363,7 +363,7 @@ object CodecProperties extends Properties("codecs") {
     forAll(anyPayload) { bytes =>
       Office.text(bytes) match {
         case Some(t) =>
-          Set("docx", "epub").contains(t.kind) && t.text != null &&
+          Set("docx", "epub", "odt").contains(t.kind) && t.text != null &&
             t.refused >= 0
         case None => true
       }
